@@ -295,6 +295,9 @@ def bbit_estimate_md5(
     # through a broadcast loop join instead (measured 5.5x faster, row-
     # identical). Every doc owns all num_perm slots, so the zipped arrays
     # are always aligned and full-length.
+    # The O(n^2) all-pairs loop join below is INTENTIONAL: this is the
+    # audit tier, whose contract is an estimate for EVERY doc pair (see
+    # docstring). Do not "fix" it with banding or candidate pruning.
     sig = slots.groupBy("id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("p", "v"))), lambda s: s["v"]

@@ -93,10 +93,20 @@ def conversation_dup_pairs(
     conversations before pairing (see module docstring). None = exact.
     ``with_audit=True`` returns ``(pairs_df, ConvDedupAudit)``.
     """
+    _check_args(threshold, measure)
     sets = conversation_turn_sets(transcripts, conv_col, text_col).localCheckpoint(
         eager=True
     )
     return _dup_pairs_from_sets(sets, threshold, measure, df_cap, with_audit)
+
+
+def _check_args(threshold: float, measure: str) -> None:
+    """Public entry points call this before their eager turn-set pin, so a
+    bad argument raises without running a Spark job."""
+    if measure not in ("jaccard", "containment"):
+        raise ValueError(f"unknown measure {measure!r}")
+    if not (0.0 < threshold <= 1.0):
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
 
 
 def _dup_pairs_from_sets(
@@ -116,10 +126,7 @@ def _dup_pairs_from_sets(
     Validation lives HERE (not only in the public wrapper) so every
     entry point — including the cluster path that hands its own pinned
     sets — keeps the clean ValueError contract."""
-    if measure not in ("jaccard", "containment"):
-        raise ValueError(f"unknown measure {measure!r}")
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    _check_args(threshold, measure)
     sizes = sets.groupBy("conv").agg(F.count("*").alias("n"))
     capped = 0
     if df_cap is not None:
@@ -186,6 +193,7 @@ def conversation_dup_clusters(
     # the caller's plan. `_dup_pairs_from_sets` pins sets; ids read the
     # pinned copy (pre-df_cap, so a fully-capped conversation still
     # keeps its cluster row).
+    _check_args(threshold, measure)
     sets = conversation_turn_sets(transcripts, conv_col, text_col).localCheckpoint(
         eager=True
     )

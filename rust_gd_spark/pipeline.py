@@ -188,10 +188,15 @@ class _StageRunner:
         in resume mode (the ``base`` stage: id-hashed corpus text — in
         resume mode downstream stages inline it, exactly the pre-round-6
         plan shape)."""
+        from .session import job_description
+
         t0 = time.monotonic()
         resumed = False
         if self.dir is None and lazy and not self.collect_stats:
-            out = build()
+            # build() may still run eager sub-jobs (bucket-count pins,
+            # emptiness probes): label them like a materialized stage's
+            with job_description(self.spark.sparkContext, f"stage:{stage}"):
+                out = build()
             with self._lock:
                 self.metrics.append(
                     (self.run_id, stage, -1,
@@ -206,8 +211,6 @@ class _StageRunner:
             # label the stage's jobs (guide §1.5) — build() may itself run
             # eager sub-jobs (internal checkpoints/probes), so set the
             # description around the whole block
-            from .session import job_description
-
             with job_description(
                 self.spark.sparkContext, f"stage:{stage}"
             ):

@@ -4,6 +4,17 @@ Local-mode testing runs on ``local[N]``; the configs below are the ones that
 also matter on a real multi-executor cluster (AQE, Arrow, sensible shuffle
 partition counts). On a 1000-executor cluster the same code runs unchanged —
 only ``master`` and the partition counts change (scaled to total cores).
+
+Python workers fork from ``rust_gd_spark._pydaemon``, not from
+``pyspark.daemon``. Every Python task calls ``importlib.invalidate_caches()``,
+and before Python 3.13 that re-reads the central directory of
+``pyspark.zip`` once per imported pyspark subpackage: about 0.1 s per task,
+reused worker or not, which made each pandas-UDF stage cost about 5x a
+JVM-only job over the same rows. The daemon re-reads an archive only when
+its stat changed. It is the one module besides the UDF kernels that the
+workers import, so the package's parent directory goes on their
+``PYTHONPATH``. ``spark.python.use.daemon=false`` launches workers without
+any daemon and so bypasses it (and pays the re-read again).
 """
 
 from __future__ import annotations
@@ -12,6 +23,8 @@ import contextlib
 import os
 
 from pyspark.sql import SparkSession
+
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @contextlib.contextmanager
@@ -85,8 +98,17 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # workers fork from the engine's daemon (module docstring)
+        .config("spark.python.daemon.module", "rust_gd_spark._pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # the daemon module (and every UDF kernel) must import in the workers
+    # whatever directory the application starts in; a caller's own worker
+    # path is kept
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _PKG_PARENT) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

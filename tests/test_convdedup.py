@@ -211,3 +211,17 @@ def test_cluster_path_validates_args(spark):
         conversation_dup_clusters(tr, threshold=0.0).collect()
     with pytest.raises(ValueError, match="measure"):
         conversation_dup_clusters(tr, measure="cosine").collect()
+
+
+def test_bad_args_raise_before_any_job(spark, convs):
+    """Both public entry points validate before their eager turn-set pin:
+    a bad threshold or measure submits no Spark job at all."""
+    tracker = spark.sparkContext.statusTracker()
+    convs.count()
+    jobs = set(tracker.getJobIdsForGroup())
+    for fn in (conversation_dup_pairs, conversation_dup_clusters):
+        with pytest.raises(ValueError, match="threshold"):
+            fn(convs, threshold=1.5)
+        with pytest.raises(ValueError, match="measure"):
+            fn(convs, measure="dice")
+    assert set(tracker.getJobIdsForGroup()) == jobs
