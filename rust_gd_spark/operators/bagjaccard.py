@@ -26,12 +26,12 @@ Scale notes (the 100 TB shape):
 * the multiset is computed by the SAME Arrow prefix-poly kernel as set
   shingles (``minhash._shingle_hash_batch(counted=True)``) — one pass,
   values + occurrence counts, no gram strings;
-* :func:`bag_jaccard_pairs` is the EXACT inverted-index form (posting
-  self-join on shingle hash → Σ min per pair): the oracle-verifiable
-  operator, with the same ``max_df`` stopword-shingle guard as
-  ``exact_jaccard_pairs``. At corpus scale, generate candidates with
-  LSH first and verify those pairs with :func:`verify_bag_jaccard` —
-  banding collision tracks SET Jaccard, which upper-bounds bag Jaccard
+* :func:`bag_jaccard_pairs` is the EXACT form: the shared
+  inverted-index join ``minhash._set_overlap_pairs`` weighted by
+  occurrence count (Σ min per pair), the oracle-verifiable operator.
+  At corpus scale, generate candidates with LSH first and verify those
+  pairs with :func:`verify_bag_jaccard` — banding collision tracks SET
+  Jaccard, which upper-bounds bag Jaccard
   (min/max ≤ set intersection/union termwise), so an LSH recall bound
   at threshold t is also a recall bound for bag-Jaccard ≥ t;
 * :func:`verify_bag_jaccard` joins the per-doc (values, counts) arrays
@@ -45,7 +45,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .minhash import _shingle_hash_batch, normalize_text
+from .minhash import _set_overlap_pairs, _shingle_hash_batch, normalize_text
 
 
 def shingle_count_df(
@@ -113,50 +113,33 @@ def bag_jaccard_pairs(
 ) -> DataFrame:
     """EXACT all-pairs multiset w-shingle Jaccard ≥ threshold.
 
-    Inverted-index shape (the ``exact_jaccard_pairs`` sibling): explode
-    (shingle, count) postings → self-join on shingle hash → Σ min(c_l,
-    c_r) per pair → totals join. ``max_df`` drops shingles present in
-    more than max_df documents before pairing (stopword-shingle guard;
-    None = exact). Output ``(id_l, id_r, bag_jaccard)`` rounded to 6dp.
+    ``minhash._set_overlap_pairs`` over (shingle, count) postings with
+    Σ min(c_l, c_r) as the intersection and multiset totals as sizes.
+    ``max_df`` drops shingles present in more than max_df documents
+    before pairing (stopword-shingle guard; None = exact). Output
+    ``(id_l, id_r, bag_jaccard)`` rounded to 6dp.
     """
     # Pin the counted-shingle table: totals and the posting explode both
     # read it, and the multiset kernel is a pandas-UDF subtree exchange
     # reuse never covers — unpinned it ran twice (0.70x interleaved with
     # the pin). Calibration-tier exact operator; one array row per doc.
     sh = shingle_count_df(df, id_col, text_col, w=w).localCheckpoint(eager=True)
-    totals = sh.select("id", F.col("total").alias("t"))
     posting = sh.select(
         "id", F.explode(F.arrays_zip("shingles", "cnts")).alias("p")
     ).select("id", F.col("p.shingles").alias("s"), F.col("p.cnts").alias("c"))
-    if max_df is not None:
-        rare = (
-            posting.groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-        )
-        posting = posting.join(rare.select("s"), "s")
-    l, r = posting.alias("l"), posting.alias("r")
-    common = (
-        l.join(r, "s")
-        .filter(F.col("l.id") < F.col("r.id"))
-        .groupBy(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-        .agg(F.sum(F.least("l.c", "r.c")).alias("m"))
+    pairs, _ = _set_overlap_pairs(
+        posting, sh.select("id", F.col("total").alias("n")), df_cap=max_df,
+        weight="c",
     )
-    out = (
-        common.join(totals.select(F.col("id").alias("id_l"), F.col("t").alias("tl")), "id_l")
-        .join(totals.select(F.col("id").alias("id_r"), F.col("t").alias("tr")), "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            F.round(
-                F.col("m").cast("double")
-                / (F.col("tl") + F.col("tr") - F.col("m")).cast("double"),
-                6,
-            ).alias("bag_jaccard"),
-        )
-        .filter(F.col("bag_jaccard") >= threshold)
-    )
-    return out
+    return pairs.select(
+        "id_l",
+        "id_r",
+        F.round(
+            F.col("inter").cast("double")
+            / (F.col("n_l") + F.col("n_r") - F.col("inter")).cast("double"),
+            6,
+        ).alias("bag_jaccard"),
+    ).filter(F.col("bag_jaccard") >= threshold)
 
 
 def verify_bag_jaccard(

@@ -9,11 +9,11 @@ and (for transcripts) sessions embedded in longer sessions —
 ``convdedup`` already measures containment at TURN-set granularity;
 this operator is the document/shingle-set analogue.
 
-Exact computation via the inverted index (the ``exact_jaccard_pairs``
-shape — explode → self-join on shingle → count → join sizes; never
-O(n²)): ``max_df`` drops stopword shingles before pairing, the standard
-scale guard. Output carries BOTH directions plus the symmetric max, so
-one pass serves "drop the subset" and "flag the superset" policies.
+Exact computation via the shared inverted-index join
+(``minhash._set_overlap_pairs``; never O(n²)): ``max_df`` drops stopword
+shingles before pairing, the standard scale guard. Output carries BOTH
+directions plus the symmetric max, so one pass serves "drop the subset"
+and "flag the superset" policies.
 
 Scale note (honest): LSH banding's collision probability follows
 JACCARD, so a low-J/high-containment pair is invisible to MinHash band
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .minhash import shingle_df
+from .minhash import _set_overlap_pairs, shingle_df
 
 
 def exact_containment_pairs(
@@ -59,49 +59,22 @@ def exact_containment_pairs(
     # (0.79x interleaved with the pin). Calibration-tier exact operator:
     # the pinned table is bounded by the slice it is pointed at.
     sh = shingle_df(df, id_col, text_col, w=w).localCheckpoint(eager=True)
-    sizes = sh.select("id", F.size(F.array_distinct("shingles")).alias("n_sh"))
-    posting = sh.select("id", F.explode("shingles").alias("s")).dropDuplicates(
-        ["id", "s"]
+    # shingle_df arrays are distinct per row: postings need no dedup
+    pairs, _ = _set_overlap_pairs(
+        sh.select("id", F.explode("shingles").alias("s")),
+        sh.select("id", F.size("shingles").alias("n")),
+        df_cap=max_df,
     )
-    if max_df is not None:
-        rare = (
-            posting.groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-        )
-        posting = posting.join(rare.select("s"), "s")
-    l = posting.select(F.col("id").alias("id_l"), "s")
-    r = posting.select(F.col("id").alias("id_r"), "s")
-    common = (
-        l.join(r, "s")
-        .filter(F.col("id_l") < F.col("id_r"))
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("n_common"))
-    )
-    out = (
-        common.join(
-            sizes.select(F.col("id").alias("id_l"), F.col("n_sh").alias("_nl")),
-            "id_l",
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_r"), F.col("n_sh").alias("_nr")),
-            "id_r",
-        )
-        .select(
-            "id_l",
-            "id_r",
-            "n_common",
-            F.round(F.col("n_common") / F.col("_nl"), 6).alias("containment_l"),
-            F.round(F.col("n_common") / F.col("_nr"), 6).alias("containment_r"),
-            F.round(
-                F.col("n_common") / F.least("_nl", "_nr"), 6
-            ).alias("containment"),
-            F.round(
-                F.col("n_common")
-                / (F.col("_nl") + F.col("_nr") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
+    out = pairs.select(
+        "id_l",
+        "id_r",
+        F.col("inter").alias("n_common"),
+        F.round(F.col("inter") / F.col("n_l"), 6).alias("containment_l"),
+        F.round(F.col("inter") / F.col("n_r"), 6).alias("containment_r"),
+        F.round(F.col("inter") / F.least("n_l", "n_r"), 6).alias("containment"),
+        F.round(
+            F.col("inter") / (F.col("n_l") + F.col("n_r") - F.col("inter")), 6
+        ).alias("jaccard"),
     )
     return out.filter(F.col("containment") >= threshold)
 

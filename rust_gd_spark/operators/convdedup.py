@@ -26,21 +26,16 @@ Scale design (10^9 conversations, 10^12 turns):
 
 * One partial-agg shuffle builds the distinct ``(conv, turn_hash)`` set
   and per-conv sizes ride the same exchange.
-* Candidate pairs come from the turn-hash INVERTED INDEX (self-join on
-  the hash — each qualifying pair meets once per shared turn and the
-  count(*) IS the intersection size; no signatures needed because the
-  intersection is computed exactly, not estimated).
+* Candidate pairs come from the shared turn-hash inverted-index join
+  (``minhash._set_overlap_pairs``): the intersection is counted
+  exactly, not estimated, so no signatures are needed.
 * Hot turns are the hazard: a boilerplate greeting shared by 10^6
   conversations posts a 10^12-pair bucket. ``df_cap`` drops turn hashes
   whose conversation frequency exceeds the cap BEFORE the self-join
-  (the prefix-filter / stop-word discipline every inverted-index join
-  uses; same philosophy as the MinHash bucket caps in `_buckets.py`).
+  (same philosophy as the MinHash bucket caps in `_buckets.py`).
   Dropped hashes are counted in the audit so the recall trade is
   visible, and common/ubiquitous turns are exactly the ones that carry
   no dedup signal. ``df_cap=None`` (the oracle config) is exact.
-* The pair aggregate is one more partial-agg shuffle on narrow
-  ``(conv_l, conv_r)`` int-or-string keys; AQE skew-join splits any
-  residual hot cell.
 """
 
 from __future__ import annotations
@@ -50,7 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from .components import assign_clusters
-from .minhash import normalize_text
+from .minhash import _set_overlap_pairs, normalize_text
 
 
 @dataclass
@@ -128,48 +123,22 @@ def _dup_pairs_from_sets(
     sets — keeps the clean ValueError contract."""
     _check_args(threshold, measure)
     sizes = sets.groupBy("conv").agg(F.count("*").alias("n"))
-    capped = 0
-    if df_cap is not None:
-        freq = sets.groupBy("h").agg(F.count("*").alias("df"))
-        hot = freq.filter(F.col("df") > df_cap)
-        if with_audit:
-            capped = hot.count()
-        sets = sets.join(F.broadcast(hot.select("h")), "h", "left_anti")
-    l = sets.select(F.col("conv").alias("conv_l"), "h")
-    r = sets.select(F.col("conv").alias("conv_r"), "h")
-    common = (
-        l.join(r, "h")
-        .filter(F.col("conv_l") < F.col("conv_r"))
-        .groupBy("conv_l", "conv_r")
-        .agg(F.count("*").alias("n_common"))
-    )
-    scored = (
-        common.join(
-            sizes.select(F.col("conv").alias("conv_l"), F.col("n").alias("_nl")),
-            "conv_l",
-        )
-        .join(
-            sizes.select(F.col("conv").alias("conv_r"), F.col("n").alias("_nr")),
-            "conv_r",
-        )
-        .select(
-            "conv_l",
-            "conv_r",
-            "n_common",
-            F.round(
-                F.col("n_common") / (F.col("_nl") + F.col("_nr") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-            F.round(
-                F.col("n_common") / F.least("_nl", "_nr"), 6
-            ).alias("containment"),
-        )
-        .filter(F.col(measure) >= threshold)
-    )
+    pairs, hot = _set_overlap_pairs(sets, sizes, df_cap=df_cap)
+    scored = pairs.select(
+        F.col("id_l").alias("conv_l"),
+        F.col("id_r").alias("conv_r"),
+        F.col("inter").alias("n_common"),
+        F.round(
+            F.col("inter") / (F.col("n_l") + F.col("n_r") - F.col("inter")), 6
+        ).alias("jaccard"),
+        F.round(F.col("inter") / F.least("n_l", "n_r"), 6).alias("containment"),
+    ).filter(F.col(measure) >= threshold)
     if not with_audit:
         return scored
+    capped = 0 if hot is None else hot.count()
     n_convs = sizes.count()
-    n_hashes = sets.select("h").distinct().count()
+    # hot ⊆ the hashes of sets, so this is the post-cap distinct count
+    n_hashes = sets.select("h").distinct().count() - capped
     return scored, ConvDedupAudit(n_convs, n_hashes, capped)
 
 

@@ -25,6 +25,9 @@ Scale notes (the parts that matter at 10^12 turns):
   drop is logged, not silent — see ``lsh_candidate_pairs`` return).
 * Verification joins the (small) candidate-pair table back to per-doc
   shingle arrays — 2 hash joins, broadcast when the pair table is small.
+* The exact all-pairs operators this approximates (set and bag Jaccard,
+  containment, conversation turn sets) share ONE inverted-index join,
+  ``_set_overlap_pairs``.
 
 This generalizes the reference's GD dictionary probe (`src/dict.rs:38-63`):
 the "base" is the band hash (what near-duplicates share), the "deviation" is
@@ -606,6 +609,55 @@ def minhash_near_dup_pairs(
     return verify_jaccard(pairs, sh, threshold=threshold)
 
 
+def _set_overlap_pairs(
+    postings: DataFrame,
+    sizes: DataFrame,
+    df_cap: int | None = None,
+    weight: str | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The exact inverted-index set-similarity join behind every exact
+    pair operator (set/bag Jaccard, containment, conversation turn sets).
+
+    ``postings``: ``(id, token, ...)`` by position, one row per distinct
+    (set, token). ``sizes``: ``(id, n)`` by position, each set's size as
+    the caller's measure counts it (distinct tokens, or multiset total
+    for the bag form). Positional, so callers pass their tables as-is.
+
+    Not O(n²): self-join postings on the token with ``id_l < id_r`` →
+    ``count(*)`` per pair (or ``Σ least`` of the ``weight`` column) →
+    join ``sizes`` on both sides. Only pairs sharing a kept token appear.
+    ``df_cap`` first drops tokens present in more than ``df_cap`` sets
+    (hot boilerplate shingles/turns post quadratic buckets; None = exact)
+    through a broadcast anti-join; sizes stay the uncapped ones.
+
+    Returns ``(pairs, hot)``: ``pairs`` with columns ``id_l, id_r, inter,
+    n_l, n_r`` (callers select by name) and the dropped tokens
+    ``hot(token)`` for audits (None without a cap).
+    """
+    id_c, tok = postings.columns[:2]
+    sid, n = sizes.columns[:2]
+    hot = None
+    if df_cap is not None:
+        freq = postings.groupBy(tok).agg(F.count("*").alias("df"))
+        hot = freq.filter(F.col("df") > df_cap).select(tok)
+        postings = postings.join(F.broadcast(hot), tok, "left_anti")
+    wl = [] if weight is None else [F.col(weight).alias("w_l")]
+    wr = [] if weight is None else [F.col(weight).alias("w_r")]
+    l = postings.select(F.col(id_c).alias("id_l"), tok, *wl)
+    r = postings.select(F.col(id_c).alias("id_r"), tok, *wr)
+    inter = F.count("*") if weight is None else F.sum(F.least("w_l", "w_r"))
+    common = (
+        l.join(r, tok)
+        .filter(F.col("id_l") < F.col("id_r"))
+        .groupBy("id_l", "id_r")
+        .agg(inter.alias("inter"))
+    )
+    pairs = common.join(
+        sizes.select(F.col(sid).alias("id_l"), F.col(n).alias("n_l")), "id_l"
+    ).join(sizes.select(F.col(sid).alias("id_r"), F.col(n).alias("n_r")), "id_r")
+    return pairs, hot
+
+
 def exact_jaccard_pairs(
     df: DataFrame,
     id_col: str = "uid",
@@ -615,13 +667,11 @@ def exact_jaccard_pairs(
     max_df: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """EXACT all-pairs w-shingle Jaccard >= threshold via inverted index.
-
-    Not O(n²): explode shingles → self-join on shingle hash → count common
-    per pair → join per-doc set sizes. ``max_df`` optionally drops shingles
-    present in more than max_df docs (stopword shingles — the classic
-    scale guard; None = exact). This is the oracle-verifiable exact
-    operator; MinHash/LSH is its approximation.
+    """EXACT all-pairs w-shingle Jaccard >= threshold via inverted index
+    (``_set_overlap_pairs``). ``max_df`` optionally drops shingles present
+    in more than max_df docs (stopword shingles — the classic scale guard;
+    None = exact). This is the oracle-verifiable exact operator;
+    MinHash/LSH is its approximation.
 
     ``shingles``: optional precomputed ``(id, shingles)`` table (the
     ``shingle_df`` shape) — callers that also verify other candidate
@@ -641,35 +691,19 @@ def exact_jaccard_pairs(
         if shingles is not None
         else shingle_df(df, id_col, text_col, w=w).localCheckpoint(eager=True)
     )
-    sizes = sh.select("id", F.size("shingles").alias("n_sh"))
-    posting = sh.select("id", F.explode("shingles").alias("s"))
-    if max_df is not None:
-        rare = posting.groupBy("s").agg(F.count("*").alias("df")).filter(
-            F.col("df") <= max_df
-        )
-        posting = posting.join(rare.select("s"), "s")
-    l = posting.alias("l")
-    r = posting.alias("r")
-    common = (
-        l.join(r, "s")
-        .filter(F.col("l.id") < F.col("r.id"))
-        .groupBy(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
-        .agg(F.count("*").alias("n_common"))
+    pairs, _ = _set_overlap_pairs(
+        sh.select("id", F.explode("shingles").alias("s")),
+        sh.select("id", F.size("shingles").alias("n")),
+        df_cap=max_df,
     )
-    out = (
-        common.join(sizes.select(F.col("id").alias("id_l"), F.col("n_sh").alias("n_l")), "id_l")
-        .join(sizes.select(F.col("id").alias("id_r"), F.col("n_sh").alias("n_r")), "id_r")
-        .select(
-            "id_l",
-            "id_r",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_l") + F.col("n_r") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
+    return pairs.select(
+        "id_l",
+        "id_r",
+        (
+            F.col("inter").cast("double")
+            / (F.col("n_l") + F.col("n_r") - F.col("inter")).cast("double")
+        ).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def jaccard_topk_neighbors(

@@ -168,8 +168,12 @@ def ensure_min_partitions(
         try:
             files = df.inputFiles()
             if files:
+                # past cap × target the width is `cap` whatever the other
+                # files add, so a many-file input stops stat-ing there
                 nbytes = 0
                 for f in files:
+                    if nbytes >= cap * target:
+                        break
                     if f.startswith("file:"):
                         f = f[len("file:"):]
                         while f.startswith("//"):

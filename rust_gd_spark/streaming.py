@@ -300,8 +300,8 @@ def _process_batch_inner(
     ep = F.lit(epoch).cast("long")
     writes = [
         ("content_keys", new_keys.withColumn("epoch", ep)),
-        ("bands", banded.select("band_idx", "band_hash", "id").withColumn("epoch", ep)),
         ("shingles", sh.withColumn("epoch", ep)),
+        ("bands", banded.select("band_idx", "band_hash", "id").withColumn("epoch", ep)),
         ("edges", edges),
         ("assignments", assignments),
     ]
@@ -320,18 +320,16 @@ def _process_batch_inner(
         ).unionByName(hist_audit)
         writes.append(("band_audits", audits))
 
-    # The store writes are independent within a batch (distinct append
-    # paths, no read-after-write); submitting them from a small driver
-    # pool (guide §2.6) lets the tiny dictionary/assignment writes
-    # back-fill cores while the verify-bearing edges write runs, instead
-    # of paying one driver barrier each in sequence. EXCEPT content_keys:
-    # it commits FIRST and alone, preserving the crash invariant the old
-    # sequential order gave — a mid-batch crash may leave band/shingle
-    # rows for ids whose content key never landed, and the next epoch
-    # would then mint a SECOND canonical id for the same content while
-    # the orphaned postings still join as history. Writing the dictionary
-    # before its references makes that state unreachable (the converse —
-    # keys without postings — only costs recall on the crashed batch).
+    # Commit order is the crash guarantee: ``content_keys`` lands first,
+    # then ``shingles``, then the rest from a small driver pool (the tiny
+    # dictionary/assignment writes back-fill cores while the
+    # verify-bearing edges write runs). A crash at any point therefore
+    # leaves every band posting with its shingle set and every stored id
+    # with its content key. Postings without shingles would silently fall
+    # out of later epochs' verify join, and references without their key
+    # would let the next epoch mint a SECOND canonical id for the same
+    # content. The converse states (keys without shingles, shingles
+    # without postings) only cost recall on the crashed batch.
     from .session import job_description
 
     def _write(item):
@@ -343,9 +341,10 @@ def _process_batch_inner(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    _write(writes[0])  # content_keys — the commit-order anchor
+    for item in writes[:2]:  # content_keys, then shingles
+        _write(item)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_write, writes[1:]))
+        list(pool.map(_write, writes[2:]))
     return counters
 
 

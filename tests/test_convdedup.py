@@ -87,6 +87,7 @@ def test_df_cap_drops_hot_turns_with_audit(spark, convs):
     assert isinstance(audit, ConvDedupAudit)
     assert audit.n_capped_hashes == 2
     assert audit.n_convs == 4
+    assert audit.n_distinct_turn_hashes == 4  # 6 distinct, 2 capped
 
 
 def test_clusters_and_singletons(spark, convs):

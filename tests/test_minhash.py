@@ -4,6 +4,7 @@ oracle at identical shingle/signature config)."""
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from rust_gd_spark.operators import minhash as mh
@@ -164,6 +165,81 @@ def test_exact_jaccard_against_bruteforce(spark):
         assert abs(j - exp) < 1e-12
     assert got[("a", "d")] == 1.0
     assert ("a", "c") not in got or got[("a", "c")] == 0.0
+
+
+_BAGS = st.lists(
+    st.dictionaries(st.integers(0, 7), st.integers(1, 3), max_size=6),
+    min_size=1,
+    max_size=8,
+)
+
+
+def _overlap_bruteforce(bags, df_cap, weighted):
+    """Reference for ``_set_overlap_pairs``: ``{(l, r): (inter, n_l,
+    n_r)}`` over pairs sharing a kept token, plus the capped tokens."""
+    df = {}
+    for b in bags:
+        for t in b:
+            df[t] = df.get(t, 0) + 1
+    hot = set() if df_cap is None else {t for t, n in df.items() if n > df_cap}
+    size = [sum(b.values()) if weighted else len(b) for b in bags]
+    out = {}
+    for l, bl in enumerate(bags):
+        for r in range(l + 1, len(bags)):
+            shared = (set(bl) & set(bags[r])) - hot
+            if shared:
+                inter = sum(
+                    min(bl[t], bags[r][t]) if weighted else 1 for t in shared
+                )
+                out[(l, r)] = (inter, size[l], size[r])
+    return out, hot
+
+
+@settings(max_examples=6, deadline=None, derandomize=True)
+@given(bags=_BAGS, df_cap=st.integers(1, 4))
+@example(bags=[{}, {}, {1: 1}], df_cap=1)  # empty sets
+@example(bags=[{1: 2, 2: 1}, {1: 2, 2: 1}, {3: 1}], df_cap=2)  # identical
+@example(bags=[{5: 1}, {5: 3}, {6: 1}], df_cap=1)  # single-token sets
+@example(bags=[{0: 1, 1: 1}, {0: 2, 1: 1}, {0: 1, 2: 1}], df_cap=2)  # everywhere
+def test_set_overlap_pairs_matches_bruteforce(spark, bags, df_cap):
+    """The shared inverted-index join equals brute force for set
+    Jaccard/containment (count) and bag Jaccard (Σ min), with and
+    without the document-frequency cap; t = 1.0 keeps exactly the
+    identical sets."""
+    postings = spark.createDataFrame(
+        [(i, t, c) for i, b in enumerate(bags) for t, c in b.items()],
+        "id long, s long, c int",
+    )
+    for weighted in (False, True):
+        sizes = spark.createDataFrame(
+            [(i, sum(b.values()) if weighted else len(b)) for i, b in enumerate(bags)],
+            "id long, n long",
+        )
+        for cap in (None, df_cap):
+            pairs, hot = mh._set_overlap_pairs(
+                postings, sizes, df_cap=cap, weight="c" if weighted else None
+            )
+            assert sorted(pairs.columns) == ["id_l", "id_r", "inter", "n_l", "n_r"]
+            got = {
+                (r.id_l, r.id_r): (r.inter, r.n_l, r.n_r) for r in pairs.collect()
+            }
+            exp, exp_hot = _overlap_bruteforce(bags, cap, weighted)
+            assert got == exp, (weighted, cap)
+            if cap is None:
+                assert hot is None
+            else:
+                assert {r.s for r in hot.collect()} == exp_hot
+            # jaccard (set or bag) at t = 1.0: exactly the identical,
+            # uncapped sets; measures are functions of (inter, n_l, n_r)
+            key = dict if weighted else set
+            ident = {
+                (l, r)
+                for l in range(len(bags))
+                for r in range(l + 1, len(bags))
+                if bags[l] and key(bags[l]) == key(bags[r])
+                and not set(bags[l]) & exp_hot
+            }
+            assert {k for k, (i, nl, nr) in got.items() if i == nl + nr - i} == ident
 
 
 def test_skew_bucket_capping(spark):

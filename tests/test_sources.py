@@ -94,6 +94,38 @@ def test_ensure_min_partitions_cap_factor(spark, tmp_path):
     assert narrow.rdd.getNumPartitions() <= df.rdd.getNumPartitions() + 1
 
 
+def test_ensure_min_partitions_stops_stat_at_cap(spark, tmp_path, monkeypatch):
+    """The driver stats input files only until cap × target bytes are
+    counted: past that the width is the cap whatever the rest add."""
+    import os
+
+    from rust_gd_spark.session import ensure_min_partitions
+
+    p = str(tmp_path / "many.parquet")
+    spark.range(4000).selectExpr("id", "repeat('x', 50) as text").repartition(
+        40
+    ).write.mode("overwrite").parquet(p)
+    n_files = len(spark.read.parquet(p).inputFiles())
+    assert n_files == 40
+    cap = spark.sparkContext.defaultParallelism
+
+    stat_calls = []
+    orig = os.path.getsize
+
+    def counting(f):
+        stat_calls.append(f)
+        return orig(f)
+
+    monkeypatch.setattr(os.path, "getsize", counting)
+    out = ensure_min_partitions(spark.read.parquet(p), target_bytes=1)
+    assert out.rdd.getNumPartitions() >= cap
+    assert len(stat_calls) == 1  # the first file alone is past cap bytes
+
+    stat_calls.clear()
+    ensure_min_partitions(spark.read.parquet(p), target_bytes=1 << 30)
+    assert len(stat_calls) == n_files  # never reaches the cap: stats all
+
+
 def test_job_description_restores_enclosing_label(spark):
     """Nested scoped labels must restore the outer label, not clear it —
     the job-audit tooling depends on stage labels surviving inner

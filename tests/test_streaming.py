@@ -116,6 +116,44 @@ def test_streaming_history_join_cap_and_audit(spark, tmp_path):
     assert edges.count() > 0
 
 
+def test_store_commit_order(spark, tmp_path, monkeypatch):
+    """A crash must never leave band postings without their shingle sets
+    (later epochs' verify inner-joins candidates to the shingle store and
+    would drop them silently): content_keys, then shingles, commit
+    before any other store write starts."""
+    import os
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    spans = {}
+    orig = DataFrameWriter.parquet
+
+    def timed(self, path, *args, **kwargs):
+        t0 = time.monotonic()
+        try:
+            return orig(self, path, *args, **kwargs)
+        finally:
+            spans[os.path.basename(path)] = (t0, time.monotonic())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", timed)
+    texts = [
+        (f"u{i}", f"alpha beta gamma delta epsilon zeta eta theta v{i % 3}")
+        for i in range(6)
+    ]
+    st.process_batch(
+        spark.createDataFrame(texts, "uid string, text string"),
+        str(tmp_path / "state"),
+    )
+    assert {"content_keys", "shingles", "bands", "edges", "assignments"} <= set(
+        spans
+    )
+    assert spans["content_keys"][1] <= spans["shingles"][0]
+    rest = [t0 for name, (t0, _) in spans.items()
+            if name not in ("content_keys", "shingles")]
+    assert spans["shingles"][1] <= min(rest)
+
+
 def test_compact_state_mid_stream(spark, turn_batches, tmp_path):
     """compact_state between micro-batches must not change the final
     clusters (dedup/partition rewrite is semantics-free), and it bounds
